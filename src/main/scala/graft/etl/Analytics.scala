@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -26,6 +26,15 @@ import graft.functions.Shims._
 final case class Oltp(
     vehicles: DataFrame, drivers: DataFrame, routes: DataFrame,
     trips: DataFrame, deliveries: DataFrame, maintenance: DataFrame)
+
+object Oltp {
+  /** The six tables as [[DataGen.writeTables]] lays them out: `<dir>/<table>`. */
+  def read(spark: SparkSession, dir: String): Oltp = {
+    def rd(n: String) = spark.read.parquet(s"$dir/$n")
+    Oltp(rd("vehicles"), rd("drivers"), rd("routes"),
+      rd("trips"), rd("deliveries"), rd("maintenance"))
+  }
+}
 
 object Analytics {
 

@@ -324,57 +324,44 @@ object DataGen {
         col("performed_by"))
   }
 
-  /** Audit log row per generated table (G10; ref 01:42-72). */
-  def loadLog(spark: SparkSession, table: String, n: Long): DataFrame = {
-    import spark.implicits._
-    Seq((s"datagen_$table", table, n, "success"))
-      .toDF("process_name", "table_name", "records_inserted", "status")
-      .withColumn("start_time", current_timestamp())
-      .withColumn("end_time", current_timestamp())
-      .withColumn("error_message", lit(null).cast("string"))
-  }
+  /** Generate every table and write it with [[writeTables]]. */
+  def writeAll(spark: SparkSession, cfg: Config, dir: String): Map[String, Long] =
+    writeTables(spark, all(spark, cfg), dir)
 
-  /** Generate and write every table as parquet, appending one audit row
-    * per table to `load_logs` (S4 batch-insert sink + G10 audit,
-    * ref 01_data_generation.py:42-72 — Spark's task-parallel write IS
-    * the chunked executemany). */
-  def writeAll(spark: SparkSession, cfg: Config, dir: String): Map[String, Long] = {
-    all(spark, cfg).map { case (name, df) =>
-      // deliveries is the incremental-extract table: date-partitioned at
-      // rest (ref 03_optimization_indexes.sql:23-24 — the daily-batch
-      // partial index; Spark's analog is directory layout + in-file
-      // ordering). Grain tracks volume: MONTH partitions here (a year of
-      // gate data = 12 right-sized directories — day grain measured
-      // ~+1 s of footer/listing overhead on every full scan at this
-      // volume), with rows SORTED by delivered_datetime inside each
-      // file so the daily extract's pushed timestamp range skips to the
-      // day's row groups — partition prune to the month, min/max skip
-      // to the day. At 100 TB/year the same code flips to day grain by
-      // changing the partition expression. NULL delivered_datetime rows
-      // land in the default partition, untouched by any day filter.
-      if (name == "deliveries") {
-        val parted = df
-          .withColumn("p_month",
-            trunc(col("delivered_datetime").cast("date"), "month"))
-          .repartition(col("p_month"))
-          .sortWithinPartitions(col("p_month"), col("delivered_datetime"))
-        graft.sources.Lake.writePartitioned(parted, s"$dir/$name", Seq("p_month"))
-      } else {
-        // r15 (guide §6): ONE file per non-partitioned table. The
-        // generator's spark.range parallelism was leaking into the
-        // at-rest layout as 32 ~100 KB files per table, so every scan
-        // of a 4 MB OLTP table launched ~32 tasks (openCostInBytes
-        // packs 4 MB per split). Row content is a pure function of row
-        // id (header doc), so the layout choice is semantics-free; at
-        // 10M-trip stress volume one file is ~370 MB — still inside
-        // the guide's 128 MB–1 GB per-file target.
-        df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name")
-      }
-      val n = spark.read.parquet(s"$dir/$name").count()
-      loadLog(spark, name, n).write.mode("append").parquet(s"$dir/load_logs")
-      name -> n
+  /** Write each table to `<dir>/<table>`, one `load_logs` row per table
+    * (S4 batch-insert sink + G10 audit, ref 01:42-72: Spark's parallel
+    * write IS the chunked executemany); returns the rows written. */
+  def writeTables(spark: SparkSession, tables: Map[String, DataFrame],
+      dir: String): Map[String, Long] =
+    LoadLog.batch(spark, dir, t => s"datagen_$t") { log =>
+      tables.map { case (name, table) => name -> log.write(name, table) { df =>
+        // deliveries is the incremental-extract table: date-partitioned at
+        // rest (ref 03_optimization_indexes.sql:23-24, the daily-batch
+        // partial index). Grain tracks volume: MONTH partitions here (day
+        // grain measured ~+1 s of footer/listing overhead on every full
+        // scan at this volume), rows SORTED by delivered_datetime in each
+        // file so the daily extract prunes to the month and min/max-skips
+        // to the day's row groups; at 100 TB/year the partition expression
+        // flips to day grain. NULL delivered_datetime rows land in the
+        // default partition, untouched by any day filter.
+        if (name == "deliveries") {
+          val parted = df
+            .withColumn("p_month",
+              trunc(col("delivered_datetime").cast("date"), "month"))
+            .repartition(col("p_month"))
+            .sortWithinPartitions(col("p_month"), col("delivered_datetime"))
+          graft.sources.Lake.writePartitioned(parted, s"$dir/$name", Seq("p_month"))
+        } else {
+          // ONE file per non-partitioned table, or the generator's
+          // spark.range parallelism becomes the at-rest layout (~100 KB
+          // files, one scan task each). Row content is a pure function of
+          // row id (header doc), so the layout is semantics-free; at
+          // 10M-trip stress volume one file is ~370 MB, inside the
+          // 128 MB–1 GB per-file target.
+          df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name")
+        }
+      }}
     }
-  }
 
   /** All seven tables, FK-consistent, fully deterministic. */
   def all(spark: SparkSession, cfg: Config = Config()): Map[String, DataFrame] = {

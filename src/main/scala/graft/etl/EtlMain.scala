@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * loaded high-water mark) as individual incremental batches.
   *
   * Without `--oltp` the seeded generator provides the OLTP tables;
-  * with it, each table is read from `<dir>/<table>.parquet`. Without
+  * with it, each table is read from `<dir>/<table>` (`Oltp.read`). Without
   * `--date`/`--nth`, the most recent day with delivered data runs
   * (the reference defaults to yesterday; "latest with data" is its
   * deterministic analog). */
@@ -94,10 +94,7 @@ object EtlMain {
     spark.sparkContext.setLogLevel("WARN")
 
     val t = opts.get("oltp") match {
-      case Some(dir) =>
-        def rd(n: String) = spark.read.parquet(s"$dir/$n.parquet")
-        Oltp(rd("vehicles"), rd("drivers"), rd("routes"),
-          rd("trips"), rd("deliveries"), rd("maintenance"))
+      case Some(dir) => Oltp.read(spark, dir)
       case None =>
         val cfg = DataGen.Config(
           nTrips = opts.get("trips").map(_.toInt).getOrElse(100000))

@@ -3,6 +3,8 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Lake
+
 /** Daily incremental ETL orchestration (reference
   * etl_pipeline.py:1170-1280 `run_etl` + `main` :1285-1313):
   * resolve target date (explicit / nth-last-with-data / yesterday),
@@ -122,22 +124,11 @@ object Pipeline {
   /** Warehouse load: dims overwritten as snapshots (SCD2 dims carry
     * their own history), fact appended date-partitioned, dim_date
     * anti-join-insert (S7, ref load_dim_date_if_not_exists :978-1024).
-    * Every write appends a `load_logs` audit row (G10, ref
-    * 01_data_generation.py:42-72), and dims are additionally kept under
-    * `snapshots/<batch date>/` — the parquet-lake analog of the DW's
-    * 30-day Time Travel retention (ref 04:162-168, SURVEY X13). */
+    * Every write logs its rows to `load_logs` ([[LoadLog]], G10); dims
+    * are also kept under `snapshots/<batch date>/`, the parquet-lake
+    * analog of the DW's 30-day Time Travel (ref 04:162-168, SURVEY X13). */
   def load(out: EtlOutput, warehouseDir: String): Unit = {
     val spark = out.fact.sparkSession
-    val t0 = new java.sql.Timestamp(System.currentTimeMillis())
-    def audit(table: String, n: Long): Unit = {
-      import spark.implicits._
-      Seq((s"etl_${out.targetDate}", table, n, t0,
-        new java.sql.Timestamp(System.currentTimeMillis()), "success",
-        null: String))
-        .toDF("process_name", "table_name", "records_inserted",
-          "start_time", "end_time", "status", "error_message")
-        .write.mode("append").parquet(s"$warehouseDir/load_logs")
-    }
     // ORDER MATTERS in the incremental flow: the fact's PIT lineage and
     // the SCD2 dims all READ the warehouse dim directories that this
     // load replaces. Everything downstream of those files (fact,
@@ -145,39 +136,27 @@ object Pipeline {
     // materialized once into its batch snapshot (inputs still intact)
     // and the live path swapped from the snapshot's files — no lineage
     // ever reads a directory after it has been replaced.
-    val fact = out.fact.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      fact
-        .withColumn("p_date_key", col("date_key"))
-        .write.mode("append").partitionBy("p_date_key")
-        .parquet(s"$warehouseDir/fact_deliveries")
-      audit("fact_deliveries", fact.count())
-      out.reports.foreach { case (name, df) =>
-        graft.sources.Lake.atomicOverwrite(df, s"$warehouseDir/$name")
-        audit(name, df.count())
-      }
-      out.stagingAudit.write.mode("append").parquet(s"$warehouseDir/staging_daily_load")
-      audit("staging_daily_load", out.stagingAudit.count())
-
+    LoadLog.batch(spark, warehouseDir, _ => s"etl_${out.targetDate}") { log =>
+      log.write("fact_deliveries", out.fact.withColumn("p_date_key", col("date_key")))(
+        _.write.mode("append").partitionBy("p_date_key").parquet(s"$warehouseDir/fact_deliveries"))
+      for ((name, df) <- out.reports)
+        log.write(name, df)(Lake.atomicOverwrite(_, s"$warehouseDir/$name"))
+      log.write("staging_daily_load", out.stagingAudit)(
+        _.write.mode("append").parquet(s"$warehouseDir/staging_daily_load"))
       out.dims.foreach { case (name, df) =>
-        if (name == "dim_date") {
-          val path = s"$warehouseDir/$name"
-          val existing = try {
-            Some(spark.read.parquet(path))
-          } catch { case _: Throwable => None }
-          val toInsert = existing match {
-            case Some(e) => df.join(e.select("date_key"), Seq("date_key"), "left_anti")
-            case None => df
+        val path = s"$warehouseDir/$name"
+        if (name == "dim_date")
+          log.write(name,
+            if (Quality.missingTables(spark, warehouseDir, Seq(name)).nonEmpty) df
+            else df.join(spark.read.parquet(path).select("date_key"), Seq("date_key"), "left_anti")
+          )(_.write.mode("append").parquet(path))
+        else
+          log.write(name, df) { d =>
+            val snap = s"$warehouseDir/snapshots/${out.targetDate}/$name"
+            d.write.mode("overwrite").parquet(snap)
+            Lake.atomicOverwrite(spark.read.parquet(snap), path)
           }
-          toInsert.write.mode("append").parquet(path)
-        } else {
-          val snap = s"$warehouseDir/snapshots/${out.targetDate}/$name"
-          df.write.mode("overwrite").parquet(snap)
-          graft.sources.Lake.atomicOverwrite(
-            spark.read.parquet(snap), s"$warehouseDir/$name")
-        }
-        audit(name, spark.read.parquet(s"$warehouseDir/$name").count())
       }
-    } finally fact.unpersist()
+    }
   }
 }

@@ -149,9 +149,7 @@ object FleetOps {
             DataGen.writeAll(spark, cfg, oltpDir)
             marker.createNewFile()
           }
-          def rd(n: String) = spark.read.parquet(s"$oltpDir/$n")
-          val t = Oltp(rd("vehicles"), rd("drivers"), rd("routes"),
-            rd("trips"), rd("deliveries"), rd("maintenance"))
+          val t = Oltp.read(spark, oltpDir)
           cached = Some((spark, t))
           t
       }

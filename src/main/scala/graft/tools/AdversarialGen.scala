@@ -477,29 +477,14 @@ object AdversarialGen {
         "maintenance_type", "description", "cost", "next_maintenance_date",
         "performed_by"))
 
-    // same at-rest layout as DataGen.writeAll: deliveries month-
-    // partitioned + day-sorted, everything else plain parquet
-    val withPlants = Map(
-      "vehicles" -> vehicles, "drivers" -> drivers,
-      "routes" -> base("routes"), "trips" -> trips,
-      "deliveries" -> deliveries, "maintenance" -> maintenance)
     // every table overwrites, so the audit log must too — an append
     // here would accumulate one generation's rows per re-run and the
     // fixture claims byte-stability (modulo the log's timestamps)
     org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(s"$dir/load_logs"), true): Unit
-    withPlants.foreach { case (name, df) =>
-      if (name == "deliveries") {
-        val parted = df
-          .withColumn("p_month",
-            trunc(col("delivered_datetime").cast("date"), "month"))
-          .repartition(col("p_month"))
-          .sortWithinPartitions(col("p_month"), col("delivered_datetime"))
-        graft.sources.Lake.writePartitioned(parted, s"$dir/$name", Seq("p_month"))
-      } else df.write.mode("overwrite").parquet(s"$dir/$name")
-      val n = spark.read.parquet(s"$dir/$name").count()
-      DataGen.loadLog(spark, name, n).write.mode("append").parquet(s"$dir/load_logs")
-    }
+    DataGen.writeTables(spark, Map("vehicles" -> vehicles, "drivers" -> drivers,
+      "routes" -> base("routes"), "trips" -> trips, "deliveries" -> deliveries,
+      "maintenance" -> maintenance), dir): Unit
     new java.io.File(dir, "_OLTP_READY").createNewFile(): Unit
   }
 }

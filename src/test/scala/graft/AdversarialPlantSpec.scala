@@ -29,9 +29,7 @@ class AdversarialPlantSpec extends GraftSpec {
   private lazy val fleet: Oltp = {
     val dir = "target/adversarial-spec/fleet_adv"
     AdversarialGen.writeFleet(spark, dir)
-    def rd(n: String) = spark.read.parquet(s"$dir/$n")
-    Oltp(rd("vehicles"), rd("drivers"), rd("routes"),
-      rd("trips"), rd("deliveries"), rd("maintenance"))
+    Oltp.read(spark, dir)
   }
 
   private val asOf = to_date(lit("2025-11-28"))

@@ -8,6 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 trait GraftSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSpec.session
   def sf(s: String): String = s"/root/testdata/$s"
+
+  /** Runs `f` on a fresh temp directory and deletes it afterwards. */
+  def withTempDir[A](prefix: String)(f: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try f(dir.toString) finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
 }
 
 object GraftSpec {

@@ -78,32 +78,39 @@ class DataGenSpec extends GraftSpec {
   }
 
   test("writeAll persists every table with an audit row each (S4/G10)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_gen").toString
-    val small = DataGen.Config(nTrips = 300, nMaintenance = 30)
-    val counts = DataGen.writeAll(spark, small, dir)
-    assert(counts.keySet === Set("vehicles", "drivers", "routes", "trips",
-      "deliveries", "maintenance"))
-    val logs = spark.read.parquet(s"$dir/load_logs")
-    assert(logs.count() === 6)
-    val logged = logs.collect()
-      .map(r => r.getAs[String]("table_name") -> r.getAs[Long]("records_inserted")).toMap
-    assert(logged === counts)
+    withTempDir("graft_gen") { dir =>
+      val small = DataGen.Config(nTrips = 300, nMaintenance = 30)
+      val counts = DataGen.writeAll(spark, small, dir)
+      assert(counts.keySet === Set("vehicles", "drivers", "routes", "trips",
+        "deliveries", "maintenance"))
+      val logs = spark.read.parquet(s"$dir/load_logs")
+      assert(logs.count() === 6)
+      val logged = logs.collect()
+        .map(r => r.getAs[String]("table_name") -> r.getAs[Long]("records_inserted")).toMap
+      assert(logged === counts)
+      // Oltp.read reads the same layout back with the same counts
+      val t = Oltp.read(spark, dir)
+      val read = Map("vehicles" -> t.vehicles, "drivers" -> t.drivers, "routes" -> t.routes,
+        "trips" -> t.trips, "deliveries" -> t.deliveries, "maintenance" -> t.maintenance)
+      assert(read.map { case (n, df) => n -> df.count() } === counts)
+    }
   }
 
   test("writeAll lays out each non-partitioned table as ONE parquet file (r15, guide §6)") {
     // the optimization pin: the generator's spark.range parallelism must
     // never leak into the at-rest layout again (32 ~100 KB files per
     // 4 MB table = ~32 scan tasks per query over the fixture)
-    val dir = java.nio.file.Files.createTempDirectory("graft_gen_layout").toString
-    val small = DataGen.Config(nTrips = 300, nMaintenance = 30)
-    DataGen.writeAll(spark, small, dir)
-    for (t <- Seq("vehicles", "drivers", "routes", "trips", "maintenance")) {
-      val files = new java.io.File(s"$dir/$t").listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
-      assert(files.length === 1, s"$t should be one file, got ${files.length}")
+    withTempDir("graft_gen_layout") { dir =>
+      val small = DataGen.Config(nTrips = 300, nMaintenance = 30)
+      DataGen.writeAll(spark, small, dir)
+      for (t <- Seq("vehicles", "drivers", "routes", "trips", "maintenance")) {
+        val files = new java.io.File(s"$dir/$t").listFiles()
+          .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
+        assert(files.length === 1, s"$t should be one file, got ${files.length}")
+      }
+      // deliveries keeps its month-partitioned lake layout (S8)
+      assert(new java.io.File(s"$dir/deliveries").listFiles().exists(_.getName.startsWith("p_month=")))
     }
-    // deliveries keeps its month-partitioned lake layout (S8)
-    assert(new java.io.File(s"$dir/deliveries").listFiles().exists(_.getName.startsWith("p_month=")))
   }
 
   test("per-type capacity ranges hold (ref 01:102-107)") {

@@ -16,34 +16,36 @@ class QualitySpec extends GraftSpec {
   }
 
   test("warehouse schema validation reports missing tables") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_q").toString
-    val tables = DataGen.all(spark, DataGen.Config(nTrips = 500, nMaintenance = 50))
-    val t = Oltp(tables("vehicles"), tables("drivers"), tables("routes"),
-      tables("trips"), tables("deliveries"), tables("maintenance"))
-    assert(Quality.missingTables(spark, dir, Quality.requiredWarehouseTables)
-      .toSet === Quality.requiredWarehouseTables.toSet)
-    val day = Pipeline.nthLastDateWithData(t, 0).get
-    Pipeline.load(Pipeline.run(spark, t, day), dir)
-    assert(Quality.missingTables(spark, dir, Quality.requiredWarehouseTables).isEmpty)
+    withTempDir("graft_q") { dir =>
+      val tables = DataGen.all(spark, DataGen.Config(nTrips = 500, nMaintenance = 50))
+      val t = Oltp(tables("vehicles"), tables("drivers"), tables("routes"),
+        tables("trips"), tables("deliveries"), tables("maintenance"))
+      assert(Quality.missingTables(spark, dir, Quality.requiredWarehouseTables)
+        .toSet === Quality.requiredWarehouseTables.toSet)
+      val day = Pipeline.nthLastDateWithData(t, 0).get
+      Pipeline.load(Pipeline.run(spark, t, day), dir)
+      assert(Quality.missingTables(spark, dir, Quality.requiredWarehouseTables).isEmpty)
+    }
   }
 
   test("JSON staging round-trips the extract losslessly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stg").toString
-    val tables = DataGen.all(spark, DataGen.Config(nTrips = 1000, nMaintenance = 50))
-    val t = Oltp(tables("vehicles"), tables("drivers"), tables("routes"),
-      tables("trips"), tables("deliveries"), tables("maintenance"))
-    val day = Pipeline.nthLastDateWithData(t, 0).get
-    Pipeline.load(Pipeline.run(spark, t, day), dir)
+    withTempDir("graft_stg") { dir =>
+      val tables = DataGen.all(spark, DataGen.Config(nTrips = 1000, nMaintenance = 50))
+      val t = Oltp(tables("vehicles"), tables("drivers"), tables("routes"),
+        tables("trips"), tables("deliveries"), tables("maintenance"))
+      val day = Pipeline.nthLastDateWithData(t, 0).get
+      Pipeline.load(Pipeline.run(spark, t, day), dir)
 
-    val extract = FactDeliveries.extractDay(t, to_date(lit(day)))
-    val parsed = Quality.readStaging(spark, dir,
-      org.apache.spark.sql.types.StructType(extract.schema))
-    assert(parsed.count() === extract.count())
-    // spot fields survive the VARIANT round-trip exactly
-    val a = extract.select($"delivery_id", $"tracking_number", $"package_weight_kg")
-      .orderBy($"delivery_id").collect().toSeq
-    val b = parsed.select($"delivery_id", $"tracking_number", $"package_weight_kg")
-      .orderBy($"delivery_id").collect().toSeq
-    assert(a === b)
+      val extract = FactDeliveries.extractDay(t, to_date(lit(day)))
+      val parsed = Quality.readStaging(spark, dir,
+        org.apache.spark.sql.types.StructType(extract.schema))
+      assert(parsed.count() === extract.count())
+      // spot fields survive the VARIANT round-trip exactly
+      val a = extract.select($"delivery_id", $"tracking_number", $"package_weight_kg")
+        .orderBy($"delivery_id").collect().toSeq
+      val b = parsed.select($"delivery_id", $"tracking_number", $"package_weight_kg")
+        .orderBy($"delivery_id").collect().toSeq
+      assert(a === b)
+    }
   }
 }
